@@ -261,12 +261,3 @@ def phash_hamming_col(a: str, b) -> F.Column:
     bc = F.col(b) if isinstance(b, str) else b
     return F.bit_count(F.col(a).bitwiseXOR(bc))
 
-
-def psnr_check_udf(df: DataFrame, bytes_col: str, ref_phash_col: str) -> DataFrame:
-    """Audit stage: recompute phash from bytes and compare with the stored
-    column — the decoded-pixel parity gate of the input_hint (PSNR>=40dB is
-    asserted at encode time for the lossy path; here we verify the hash)."""
-    out = with_decode_features(df.select(bytes_col, ref_phash_col), bytes_col)
-    return out.select(
-        (F.col("phash_check") == F.col(ref_phash_col)).alias("phash_ok")
-    )

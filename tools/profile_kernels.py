@@ -3,7 +3,10 @@
 
 Run on a QUIET host (uptime load < ~2). Times each component of
 features/image_features._features_batch over a realistic same-shape batch
-so optimization work targets the real hot spot instead of guesses.
+so optimization work targets the real hot spot instead of guesses. PNG
+decode is timed twice: filter 0 on every row (what encode_png writes) and
+libpng-style adaptive filters 0-4 (perfbench/pngfilter.py, what ordinary
+encoders write).
 
 Usage: python tools/profile_kernels.py [n_images] [size]
 """
@@ -17,6 +20,7 @@ import numpy as np
 sys.path.insert(0, ".")
 from dagli_spark.images.codec import decode_image, encode_png, encode_qjpg  # noqa: E402
 from dagli_spark.images.phash import phash64_stack  # noqa: E402
+from perfbench.pngfilter import encode_png_filtered  # noqa: E402
 
 
 def bench(label, fn, reps=3):
@@ -38,10 +42,14 @@ def main():
             for _ in range(n)]
     blobs_png = [encode_png(a) for a in imgs]
     blobs_qjpg = [encode_qjpg(a) for a in imgs]
+    # libpng-style adaptive per-row filters 0-4: the general unfilter path
+    blobs_adaptive = [encode_png_filtered(a) for a in imgs]
     print(f"batch: {n} images {size}x{size}x3 "
           f"({n*size*size*3/1e6:.0f} MB decoded)")
 
     bench("decode png", lambda: [decode_image(b) for b in blobs_png])
+    bench("decode png (adaptive filters)",
+          lambda: [decode_image(b) for b in blobs_adaptive])
     bench("decode qjpg", lambda: [decode_image(b) for b in blobs_qjpg])
 
     arrs = [decode_image(b) for b in blobs_png]
